@@ -30,33 +30,22 @@ object AnnQueries {
     * batch against the maintained state. */
   private def semanticIndexLifecycle(s: SparkSession, dir: String,
       cells: Int, iters: Int, nPartitions: Int, nprobe: Int,
-      scratch: String, pq: Boolean = false): DataFrame = {
+      scratch: String,
+      codec: graft.similarity.IvfCodec = graft.similarity.IvfCodec.Raw)
+      : DataFrame = {
     val e = Tables.t(s, dir, "embeddings")
     val base = e.filter(col("vec_id") % 10 =!= 0 && col("vec_id") % 10 =!= 9)
     val cents = graft.similarity.KMeans.train(base, "vec_id", "embedding",
       k = cells, iters = iters)
-    val append = e.filter(col("vec_id") % 10 === 9)
-    val erase = e.filter(col("vec_id") % 10 === 5)
-    val batch = e.filter(col("vec_id") % 10 === 0)
-    if (pq) {
-      // the PQ-coded flavor (q:dd21): same lifecycle, (cell,id,code)-only
-      // candidate scan, exhaustive rerank makes the threshold exact
-      val idx = new graft.similarity.IvfPqIndex(s,
-        graft.util.Scratch.dir(scratch), nPartitions = nPartitions,
-        m = 8, k = 16)
-      idx.build(base, cents)
-      idx.append(append, cents, maxDriftRatio = 4.0)
-      idx.remove(erase, cents)
-      idx.neighborsWithin(batch, cents, minSim = 0.30, nprobe = nprobe,
-        rerank = Int.MaxValue)
-    } else {
-      val idx = new graft.similarity.IvfIndex(s,
-        graft.util.Scratch.dir(scratch), nPartitions = nPartitions)
-      idx.build(base, cents)
-      idx.append(append, cents, maxDriftRatio = 4.0)
-      idx.remove(erase, cents)
-      idx.neighborsWithin(batch, cents, minSim = 0.30, nprobe = nprobe)
-    }
+    // the PQ codec (q:dd21) runs the same lifecycle with a (cell,id,code)-
+    // only candidate scan; the exhaustive rerank keeps the threshold exact
+    val idx = new graft.similarity.IvfIndex(s,
+      graft.util.Scratch.dir(scratch), nPartitions = nPartitions, codec)
+    idx.build(base, cents)
+    idx.append(e.filter(col("vec_id") % 10 === 9), cents, maxDriftRatio = 4.0)
+    idx.remove(e.filter(col("vec_id") % 10 === 5), cents)
+    idx.neighborsWithin(e.filter(col("vec_id") % 10 === 0), cents,
+      minSim = 0.30, nprobe = nprobe)
   }
 
   /** dd20 at the SCALE config the BENCH_SCALE gate measures: cells ∝ √n
@@ -191,7 +180,7 @@ object AnnQueries {
       idx.build(base, cents)
       idx.append(e.filter(col("vec_id") % 4 === 2), cents, maxDriftRatio = 4.0)
       idx.append(e.filter(col("vec_id") % 4 === 3), cents, maxDriftRatio = 4.0)
-      idx.serve(e.filter(col("vec_id") < 8), cents, k = 3, nprobe = 8)
+      idx.serve(e.filter(col("vec_id") < 8), cents, kTop = 3, nprobe = 8)
         .orderBy("q_id", "rank")
     },
     // ---- ann15: DELETION from the maintained index — the right-to-
@@ -210,7 +199,7 @@ object AnnQueries {
         graft.util.Scratch.dir("graft_ann15"), nPartitions = 8)
       idx.build(e, cents)
       idx.remove(e.filter(col("vec_id") % 5 === 4), cents)
-      idx.serve(e.filter(col("vec_id") < 8), cents, k = 3, nprobe = 8)
+      idx.serve(e.filter(col("vec_id") < 8), cents, kTop = 3, nprobe = 8)
         .orderBy("q_id", "rank")
     },
     // ---- dd20: the MAINTAINED SEMANTIC-DEDUP index — dd19's lifecycle
@@ -238,7 +227,8 @@ object AnnQueries {
     // this query's oracle too: the raw and PQ flavors must agree exactly
     "dd21_pq_index_dedup" -> { (s, dir) =>
       semanticIndexLifecycle(s, dir, cells = 8, iters = 3, nPartitions = 8,
-        nprobe = 8, scratch = "graft_dd21", pq = true)
+        nprobe = 8, scratch = "graft_dd21",
+        codec = graft.similarity.IvfCodec.Pq(m = 8, k = 16))
         .orderBy("new_id", "corpus_id")
     },
     // ---- st33: the streaming SEMANTIC dedup SERVICE — st32's
@@ -307,7 +297,7 @@ object AnnQueries {
       graft.streaming.Streams.runForeachBatchIds(stream) { (batch, id) =>
         if (id == 2) // the mid-stream retrain: promote a fresh generation
           rot.rebuild(e, retrain.join())
-        rot.serve(batch, k = 3, nprobe = 8)
+        rot.serve(batch, kTop = 3, nprobe = 8)
           .write.mode("append").parquet(out)
       }
       s.read.parquet(out).orderBy("q_id", "rank")
@@ -335,7 +325,7 @@ object AnnQueries {
         "embedding", k = 8, iters = 3))
       rot.append(e.filter(col("vec_id") % 4 === 1), maxDriftRatio = 4.0)
       rot.rebuild(e, retrain.join())
-      rot.serve(e.filter(col("vec_id") < 8), k = 3, nprobe = 8)
+      rot.serve(e.filter(col("vec_id") < 8), kTop = 3, nprobe = 8)
         .orderBy("q_id", "rank")
     },
     // ---- ann18: ONLINE rebuild of the PQ-coded index — ann17's serving-
@@ -349,8 +339,9 @@ object AnnQueries {
     "ann18_pq_online_rebuild" -> { (s, dir) =>
       val e = Tables.t(s, dir, "embeddings")
       val half = e.filter(col("vec_id") % 2 === 0)
-      val rot = new graft.similarity.RotatingIvfPqIndex(s,
-        graft.util.Scratch.dir("graft_ann18"), nPartitions = 8, m = 8, k = 16)
+      val rot = new graft.similarity.RotatingIvfIndex(s,
+        graft.util.Scratch.dir("graft_ann18"), nPartitions = 8,
+        graft.similarity.IvfCodec.Pq(m = 8, k = 16))
       // retrain for the next generation concurrently with build+append
       // (guide §2.6 — see ann17)
       val retrain = graft.util.Async.future(graft.similarity.KMeans
@@ -359,8 +350,7 @@ object AnnQueries {
         "embedding", k = 8, iters = 3))
       rot.append(e.filter(col("vec_id") % 4 === 1), maxDriftRatio = 4.0)
       rot.rebuild(e, retrain.join())
-      rot.serve(e.filter(col("vec_id") < 8), kTop = 3, nprobe = 8,
-          rerank = Int.MaxValue)
+      rot.serve(e.filter(col("vec_id") < 8), kTop = 3, nprobe = 8)
         .orderBy("q_id", "rank")
     },
     // ---- ann16: the PQ-CODED maintained index — ann14's lifecycle at
@@ -378,13 +368,13 @@ object AnnQueries {
       val base = e.filter(col("vec_id") % 4 <= 1)
       val cents = graft.similarity.KMeans.train(base, "vec_id", "embedding",
         k = 8, iters = 3)
-      val idx = new graft.similarity.IvfPqIndex(s,
-        graft.util.Scratch.dir("graft_ann16"), nPartitions = 8, m = 8, k = 16)
+      val idx = new graft.similarity.IvfIndex(s,
+        graft.util.Scratch.dir("graft_ann16"), nPartitions = 8,
+        graft.similarity.IvfCodec.Pq(m = 8, k = 16))
       idx.build(base, cents)
       idx.append(e.filter(col("vec_id") % 4 === 2), cents, maxDriftRatio = 4.0)
       idx.append(e.filter(col("vec_id") % 4 === 3), cents, maxDriftRatio = 4.0)
-      idx.serve(e.filter(col("vec_id") < 8), cents, kTop = 3, nprobe = 8,
-          rerank = Int.MaxValue)
+      idx.serve(e.filter(col("vec_id") < 8), cents, kTop = 3, nprobe = 8)
         .orderBy("q_id", "rank")
     },
     // Product quantization: train 8×16 sub-codebooks (one Lloyd's job per
@@ -664,7 +654,7 @@ object AnnQueries {
       val stream = stagingF.join()
       val out = graft.util.Scratch.dir("graft_st29_out")
       graft.streaming.Streams.runForeachBatch(stream) { batch =>
-        idx.serve(batch, cents, k = 3, nprobe = 8)
+        idx.serve(batch, cents, kTop = 3, nprobe = 8)
           .write.mode("append").parquet(out)
       }
       s.read.parquet(out).orderBy("q_id", "rank")

@@ -302,18 +302,24 @@ object Ann {
     // winner the broadcast-join + min_by aggregate produced, with no
     // corpus shuffle (see [[centsRow]])
     corpus.select(col(idCol), col(vecCol))
-      .crossJoin(broadcast(centsRow(centroids, centId, centVec)))
+      // empty-centroids contract (ADVICE r15): the old broadcast inner
+      // join emitted zero rows for an empty centroid frame, but centsRow's
+      // agg always yields one row (an empty array) — filter that row out
+      .crossJoin(broadcast(centsRow(centroids, centId, centVec)
+        .filter(size(col("__cs")) > 0)))
       .select(col(idCol), col(vecCol),
         nearest_cell(col(vecCol), col("__cs")).as("__nc"))
-      // empty-centroids contract (ADVICE r15): the old broadcast inner
-      // join emitted zero rows for an empty centroid frame; centsRow's
-      // agg always yields one row with an empty array and nearest_cell
-      // then returns null — drop those rows so the contract is preserved
-      // (a no-op narrow filter when centroids exist: __nc is non-null for
-      // every fixed-dim vector then)
-      .filter(col("__nc").isNotNull)
+      // with centroids present a null __nc means a null or wrong-dimension
+      // vector: the CELL value itself raises naming it, so no consumer (a
+      // join's inferred not-null filter included) can drop the row
+      // silently from a build/append or turn a remove into a silent 0
       .select(col(idCol), col(vecCol),
-        col("__nc.cent").as(cellCol), col("__nc.d2").as("d2"))
+        when(col("__nc").isNull, raise_error(concat(
+          lit(s"vector has no nearest cell (null or not the centroids' " +
+            s"dimension): $idCol = "),
+          coalesce(col(idCol).cast("string"), lit("null")))))
+          .otherwise(col("__nc.cent")).as(cellCol),
+        col("__nc.d2").as("d2"))
   }
 
   /** Serving path over a PERSISTED IVF index: `stored` is the corpus

@@ -4,9 +4,8 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The generation/pointer machinery behind online index rebuilds — ONE
-  * definition shared by [[RotatingIvfIndex]] (raw vectors) and
-  * [[RotatingIvfPqIndex]] (PQ codes): each build lands in a fresh
+/** The generation/pointer machinery behind [[RotatingIvfIndex]]'s online
+  * rebuilds, whatever the index's codec: each build lands in a fresh
   * generation directory with its frozen centroids persisted beside it (a
   * generation is self-consistent by construction), a small `current`
   * pointer file promotes it in one atomic rename, readers resolve the
@@ -22,8 +21,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * batch in a superseded generation. Readers (serve) never take the lock:
   * rebuild-while-serving stays blackout-free. Writers in DIFFERENT
   * processes are outside the monitor's reach; the supported deployment is
-  * ONE writer process (unlimited readers), and the rotating wrappers
-  * back that doctrine with a post-commit pointer re-check that turns a
+  * ONE writer process (unlimited readers), and the rotating wrapper
+  * backs that doctrine with a post-commit pointer re-check that turns a
   * cross-process promote-during-write into a loud error instead of a
   * silently vanished batch. */
 private[graft] final class GenRotator(val spark: SparkSession,
@@ -127,10 +126,10 @@ private[graft] final class GenRotator(val spark: SparkSession,
 
 private[graft] object GenRotator {
   // one writer monitor per normalized rotating-index root, JVM-wide —
-  // two wrapper instances over the same directory (or the raw and PQ
-  // flavors accidentally pointed at one root) serialize on the SAME
-  // object. Bounded by the number of distinct roots the driver opens;
-  // never reclaimed (reclaiming would reintroduce the race).
+  // two wrapper instances over the same directory (whatever their codecs)
+  // serialize on the SAME object. Bounded by the number of distinct roots
+  // the driver opens; never reclaimed (reclaiming would reintroduce the
+  // race).
   private val locks =
     new java.util.concurrent.ConcurrentHashMap[Path, Object]()
   private def lock(root: Path): Object =

@@ -7,12 +7,12 @@ import org.apache.spark.sql.functions._
 
 import graft.store.PartitionedStore
 
-/** Machinery shared by the maintained-index family ([[IvfIndex]] raw
-  * vectors, [[IvfPqIndex]] PQ codes, and the dedup-side
-  * [[graft.dedup.LshIndex]]): the drift statistic, the erasure commit,
-  * compaction, replay guarding, and the meta-file field parse. One
-  * definition each — a hardening fix (the round-14 stale-baseline and
-  * empty-erasure class) lands once instead of per index flavor. */
+/** Machinery shared by the maintained indexes ([[IvfIndex]] under either
+  * codec, and the dedup-side [[graft.dedup.LshIndex]]): the drift
+  * statistic, the erasure commit, compaction, replay guarding, and the
+  * meta-file field parse. One definition each — a hardening fix (the
+  * round-14 stale-baseline and empty-erasure class) lands once instead of
+  * per index. */
 private[graft] object IvfCommon {
 
   /** Parse a numeric field out of a tiny hand-written meta JSON. */
@@ -26,14 +26,12 @@ private[graft] object IvfCommon {
 
   /** Drift ratio of a batch's mean d2 against the frozen train-time
     * baseline; throws past `maxDriftRatio` naming the no-blackout
-    * remediation FOR THE INDEX FLAVOR THAT FIRED IT (`remediation` — the
-    * raw index names RotatingIvfIndex.rebuild, the PQ index names
-    * RotatingIvfPqIndex.rebuild because its codebooks must re-freeze with
-    * the quantizer). A zero baseline (every training vector ON its
-    * centroid) with a zero-distance batch is NO drift, not infinite
-    * drift. */
+    * remediation (a rotating rebuild re-freezes the quantizer and, for
+    * the PQ codec, the codebooks with it). A zero baseline (every
+    * training vector ON its centroid) with a zero-distance batch is NO
+    * drift, not infinite drift. */
   def driftRatio(mean: Double, baseline: Double,
-      maxDriftRatio: Double, remediation: String): Double = {
+      maxDriftRatio: Double): Double = {
     val ratio =
       if (baseline > 0) mean / baseline
       else if (mean == 0) 1.0
@@ -43,7 +41,7 @@ private[graft] object IvfCommon {
         f"quantizer drift: batch mean d2 $mean%.6f is $ratio%.2fx the " +
           f"train-time mean $baseline%.6f (max $maxDriftRatio%.2f) — " +
           "re-train the centroids and rebuild the index " +
-          s"($remediation swaps a fresh build in without a " +
+          "(RotatingIvfIndex.rebuild swaps a fresh build in without a " +
           "serving blackout)")
     ratio
   }

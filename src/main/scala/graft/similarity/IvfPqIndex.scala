@@ -1,290 +1,13 @@
 package graft.similarity
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.spark.sql.SparkSession
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructField, StructType}
-
-import graft.store.PartitionedStore
-
-/** The PQ-CODED maintained index — [[IvfIndex]]'s layout with product-
-  * quantized residual codes stored alongside each vector, which is what
-  * production IVF serving deploys at 100 TB (FAISS IndexIVFPQ; the static
-  * composition is q:ann11 / [[IvfPq]], this is its MAINTAINED shape): the
-  * serving scan reads (cell, id, code) — a few bytes per vector, column-
-  * pruned out of the parquet so the raw vectors never move — and only the
-  * `rerank` ADC survivors per query fetch their raw vector for the exact
-  * re-score, from the same probed partitions, AFTER the cut. The reference
-  * analog remains the time-sliced index maintenance lifecycle
-  * (`aleph2_search_index_service_elasticsearch/.../services/
-  * ElasticsearchIndexService.java:335-391`).
-  *
-  * Frozen-model doctrine (identical to [[IvfIndex]], extended to the
-  * codebooks): build() freezes BOTH the coarse quantizer (caller-supplied
-  * centroids) and the residual codebooks it trains, persists the codebooks
-  * next to the store (`pq_codebooks.parquet` — m·k rows of bounded model
-  * state) and the drift baseline in `ivfpq_meta.json` (the build's commit
-  * point: deleted before the new corpus lands, written after, so a crash
-  * mid-build reads as "not built", never a stale baseline). append()
-  * drift-checks against the baseline and encodes under the FROZEN
-  * codebooks — that is what makes appends O(batch) — and fails loudly
-  * past `maxDriftRatio` (the retrain signal; [[RotatingIvfIndex]] is the
-  * no-blackout rebuild lever). Same fused pre-commit aggregate, same
-  * write-lineage replay guard, same O(batch) append commit and same
-  * crash/rollback contract as [[IvfIndex]] — all inherited from
-  * [[PartitionedStore]].
-  *
-  * Serving: ONE probe derivation feeds the partition-directory prune and
-  * the per-(query, probed-cell) residual ADC tables (asymmetric distance:
-  * the query's residual against THAT cell, mirroring the corpus-side
-  * residual encode), so they can never fork. `nprobe = |cells|` with
-  * `rerank = Int.MaxValue` degenerates to exact brute-force ranking — the
-  * oracle config (q:ann16) pinning build→append→append→ADC→rerank end to
-  * end; IvfPqIndexSpec pins recall for genuinely-approximate settings.
-  */
-final class IvfPqIndex(val spark: SparkSession, val root: String,
-    val nPartitions: Int, val m: Int, val k: Int,
-    val idCol: String = "vec_id", val vecCol: String = "embedding",
-    val cellCol: String = "cell", val centId: String = "cent_id",
-    val centVec: String = "cent_vec") {
-  require(m >= 1 && k >= 2, s"m/k must be >= 1/2: $m/$k")
-
-  val store = new PartitionedStore(spark, root, Seq(cellCol), nPartitions)
-
-  /** Test-only fault-injection seam (the [[IvfIndex]] doctrine): invoked
-    * after [[build]]'s ordered persistent steps (`metaInvalidated`,
-    * `codebooksWritten`, `storeInit`) so FaultInjectionSpec can snapshot
-    * the state a crash at that point would leave — in particular the
-    * PQ-specific window where NEW codebooks sit next to OLD-codebook
-    * codes, reachable only through the deleted meta. No-op in
-    * production. */
-  private[graft] var onStep: String => Unit = _ => ()
-
-  private def metaPath = Paths.get(root, "ivfpq_meta.json")
-  private def codebooksPath = Paths.get(root, "pq_codebooks.parquet")
-
-  private def metaField(name: String): Double =
-    IvfCommon.metaField(metaPath, name, s"IVF-PQ index at $root not built")
-
-  /** Train-time mean squared coarse-assignment distance — the drift
-    * baseline, same statistic as [[IvfIndex.trainMeanD2]]. */
-  def trainMeanD2: Double = metaField("train_mean_d2")
-
-  private def subDim: Int = metaField("sub_dim").toInt
-
-  /** The FROZEN residual codebooks, reconstructed from the persisted
-    * parquet — m·k rows of bounded model state, never data-sized. */
-  def codebooks(): Pq.Codebooks = {
-    val d = subDim
-    val rows = spark.read.parquet(codebooksPath.toString).collect()
-    require(rows.length == m * k,
-      s"codebooks at $root hold ${rows.length} entries, expected ${m * k}")
-    val arr = Array.fill(m, k)(Seq.empty[Double])
-    rows.foreach(r => arr(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2))
-    Pq.Codebooks(m, k, d, arr.map(_.toIndexedSeq).toIndexedSeq)
-  }
-
-  /** Coarse-assign + residual: (id, vec, cell, d2, __res). The residual is
-    * against the ASSIGNED cell's centroid — the corpus side of the
-    * asymmetric distance. */
-  private def assignWithResidual(df: DataFrame,
-      centroids: DataFrame): DataFrame = {
-    val assigned = Ann.assignCellsWithDist(df, centroids,
-      idCol, vecCol, centId, centVec, cellCol)
-    val cent = centroids.select(col(centId).as(cellCol),
-      col(centVec).cast("array<double>").as("__cv"))
-    assigned.join(broadcast(cent), Seq(cellCol))
-      .withColumn("__res", zip_with(col(vecCol).cast("array<double>"),
-        col("__cv"), (a, b) => a - b))
-      .drop("__cv")
-  }
-
-  private def storedCols = Seq(col(idCol), col(vecCol), col(cellCol),
-    col("d2"), col("code"))
-
-  /** Build: assign + residual-encode the corpus under codebooks trained on
-    * ITS residuals, persist per-cell, freeze everything. Overwrites any
-    * existing index; the meta swap at the end is the commit point. */
-  def build(corpus: DataFrame, centroids: DataFrame): Unit = {
-    // validate BEFORE invalidating: an empty corpus would otherwise die
-    // deep inside Pq.train ('next on empty iterator') AFTER the previous
-    // build's baseline was deleted — a trivially-invalid rebuild call must
-    // not brick a healthy index
-    require(!corpus.isEmpty,
-      s"IVF-PQ build corpus is empty — an index at $root needs at least one vector")
-    val res = assignWithResidual(corpus, centroids)
-    // codebook training runs its OWN validation (>= k sample vectors,
-    // dim divisible by m) — let any of it fail while the previous index
-    // is still fully intact; only then invalidate the baseline/codebook
-    // pairing BEFORE the first persistent mutation (writeCodebooks), the
-    // IvfIndex crash-window doctrine
-    val books = Pq.train(res.select(col(idCol), col("__res")),
-      idCol, "__res", m, k, iters = 2)
-    Files.deleteIfExists(metaPath)
-    onStep("metaInvalidated")
-    writeCodebooks(books)
-    onStep("codebooksWritten")
-    // baseline rides the init write as an observed metric — one action,
-    // no post-write d2-column rescan (see [[IvfIndex.build]])
-    val obs = org.apache.spark.sql.Observation()
-    store.init(Pq.encode(res, "__res", books).select(storedCols: _*)
-      .observe(obs, avg(col("d2")).as("mean_d2")))
-    onStep("storeInit")
-    val meanOpt = obs.get.get("mean_d2").flatMap(Option(_))
-    require(meanOpt.isDefined,
-      s"IVF-PQ build corpus yielded no assignment distances (null " +
-        s"embeddings?) — the index at $root has no drift baseline")
-    val body = String.format(java.util.Locale.ROOT,
-      """{"train_mean_d2":%s,"m":%d,"k":%d,"sub_dim":%d,"n_partitions":%d}""",
-      java.lang.Double.toString(meanOpt.get.asInstanceOf[Double]),
-      Int.box(m), Int.box(k),
-      Int.box(books.subDim), Int.box(nPartitions))
-    val tmp = Paths.get(root, s".meta_tmp${System.nanoTime()}")
-    Files.write(tmp, body.getBytes("UTF-8"))
-    Files.move(tmp, metaPath,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  // ONE definition of the (sub, cent, cv) codebook row layout — the same
-  // frame Pq's trainer joins against, so codebooks() can't desynchronize
-  private def writeCodebooks(books: Pq.Codebooks): Unit =
-    Pq.codebookFrame(spark, books.cents)
-      .coalesce(1).write.mode("overwrite").parquet(codebooksPath.toString)
-
-  /** Append a batch under the FROZEN coarse quantizer AND codebooks:
-    * assign, drift-check BEFORE any write, encode, commit O(batch) through
-    * the store's append (replay guard fused into the write lineage, same
-    * as [[IvfIndex.append]]). Returns the measured drift ratio. */
-  def append(batch: DataFrame, centroids: DataFrame,
-      maxDriftRatio: Double = Double.MaxValue): Double = {
-    val baseline = trainMeanD2
-    val books = codebooks()
-    val res = assignWithResidual(batch, centroids)
-    val pre = res.agg(avg(col("d2")).as("mean"),
-      collect_set(store.partitionId).as("touched")).collect()(0)
-    require(!pre.isNullAt(0), "append batch is empty")
-    val mean = pre.getDouble(0)
-    val touched = pre.getSeq[Int](1).sorted
-    val ratio = IvfCommon.driftRatio(mean, baseline, maxDriftRatio,
-      remediation = "RotatingIvfPqIndex.rebuild")
-    val guarded = IvfCommon
-      .guardReplays(Pq.encode(res, "__res", books),
-        store.readPartitions(touched), idCol)
-      .select(storedCols: _*)
-    store.append(touched, guarded)
-    ratio
-  }
-
-  /** Erasure, [[IvfIndex.remove]]'s contract: victims re-derive their cell
-    * under the frozen quantizer, only touched partitions rewrite, one
-    * id-column-pruned statistics pass. Returns rows removed. */
-  def remove(victims: DataFrame, centroids: DataFrame,
-      requirePresent: Boolean = true): Long =
-    IvfCommon.removeFrom(store,
-      Ann.assignCellsWithDist(victims, centroids,
-        idCol, vecCol, centId, centVec, cellCol),
-      idCol, storedCols, requirePresent)
-
-  /** Compact fragmented partitions, [[IvfIndex.compact]]'s contract. */
-  def compact(maxDirs: Int = 1): Seq[Int] =
-    IvfCommon.compactStore(store, maxDirs)
-
-  /** Partition-pruned ADC serving: derive probes ONCE (feeding both the
-    * directory prune and the candidate join), score only the probed
-    * partitions' (cell, id, code) columns against broadcast per-(query,
-    * cell) residual distance tables, keep `rerank` candidates per query by
-    * quantized distance, exact-rerank those by true cosine with raw
-    * vectors fetched from the same probed partitions AFTER the cut. */
-  def serve(queries: DataFrame, centroids: DataFrame, kTop: Int,
-      nprobe: Int, rerank: Int): DataFrame = {
-    require(kTop >= 1 && nprobe >= 1 && rerank >= kTop,
-      s"need kTop >= 1, nprobe >= 1, rerank >= kTop: $kTop/$nprobe/$rerank")
-    // bounded-heap rank (Ann.rankTopK): reranked candidates never cross a
-    // shuffle, only n_q·kTop ranked rows do
-    Ann.rankTopK(rerankedScores(queries, centroids, nprobe, rerank)
-      .select("q_id", "c_id", "sim"), kTop)
-  }
-
-  /** Threshold (radius) neighbor join against the PQ-coded index —
-    * [[IvfIndex.neighborsWithin]]'s semantics at the 100 TB memory point:
-    * the candidate scan still reads ONLY (cell, id, code) of the probed
-    * partitions, the ADC cut keeps `rerank` survivors per batch vector,
-    * and the exact cosine rerank both verifies the threshold and emits
-    * the reported `sim` — a near-dup is never asserted from the
-    * approximate distance alone. `nprobe = |cells|` with
-    * `rerank = Int.MaxValue` degenerates to the exact exhaustive
-    * threshold join (the oracle config, q:dd21); bounded settings are the
-    * scale path whose recall trade is one-sided (containment,
-    * IvfPqIndexSpec). Identity pairs are excluded so append-then-query
-    * services don't report each row as its own duplicate. */
-  def neighborsWithin(batch: DataFrame, centroids: DataFrame,
-      minSim: Double, nprobe: Int, rerank: Int): DataFrame = {
-    require(nprobe >= 1 && rerank >= 1,
-      s"need nprobe >= 1, rerank >= 1: $nprobe/$rerank")
-    rerankedScores(batch, centroids, nprobe, rerank)
-      .filter(col("sim") >= minSim && col("c_id") =!= col("q_id"))
-      .select(col("c_id").as("corpus_id"), col("q_id").as("new_id"),
-        col("sim"))
-  }
-
-  /** Probe + ADC cut + exact rerank, shared by [[serve]] and
-    * [[neighborsWithin]]: `(q_id, c_id, sim)` for the `rerank` ADC
-    * survivors of each query, with `sim` the EXACT cosine. */
-  private def rerankedScores(queries: DataFrame, centroids: DataFrame,
-      nprobe: Int, rerank: Int): DataFrame = {
-    val books = codebooks()
-    val (probeRows, probeSchema) = Ann.collectProbes(
-      queries, centroids, nprobe, idCol, vecCol, centId, centVec)
-    val cellType = store.schema(cellCol).dataType
-    val cells = Ann.probeCells(probeRows, cellType)
-    val cellRows = cells.map(c => Row(c))
-    val cellsDf = spark.createDataFrame(
-      java.util.Arrays.asList(cellRows: _*),
-      StructType(Seq(StructField(cellCol, cellType, nullable = false))))
-    val ids = if (cells.isEmpty) Seq(0) else store.touchedBy(cellsDf)
-    val pruned = store.readPartitions(ids)
-    // probe side: per (query, probed cell), the query's residual against
-    // THAT cell -> one m×k ADC table (the asymmetric-distance counterpart
-    // of the corpus-side residual encode)
-    val probesLocal = spark.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), probeSchema)
-    val cent = centroids.select(col(centId).as("cent"),
-      col(centVec).cast("array<double>").as("__cv"))
-    val probes = probesLocal.join(broadcast(cent), Seq("cent"))
-      .withColumn("__qres", zip_with(col("q_vec").cast("array<double>"),
-        col("__cv"), (a, b) => a - b))
-      .select(col("q_id"), col("cent").cast(cellType).as(cellCol),
-        Pq.distanceTable(col("__qres"), books).as("__dtab"))
-    // ADC scan: ONLY (cell, id, code) of the probed partitions — the
-    // parquet reader prunes the raw-vector column out of this stage
-    val scored = pruned.select(col(cellCol), col(idCol).as("c_id"), col("code"))
-      .join(broadcast(probes), Seq(cellCol))
-      .withColumn("__adc", graft.functions.VectorExprFunctions
-        .pq_adc(col("code"), col("__dtab")))
-    // exhaustive rerank keeps every candidate — skip the corpus-candidate
-    // rank window entirely (see [[Pq.adcTopK]]; guide §2.4)
-    val candidates =
-      if (rerank == Int.MaxValue) scored.select("q_id", "c_id")
-      else {
-        val wAdc = Window.partitionBy("q_id").orderBy(col("__adc"), col("c_id"))
-        scored
-          .withColumn("__cr", row_number().over(wAdc))
-          .filter(col("__cr") <= rerank)
-          .select("q_id", "c_id")
-      }
-    // exact rerank: |queries|·rerank raw vectors, equi-joined from the
-    // probed partitions after the cut
-    val qVecs = probesLocal.select(col("q_id"),
-      col("q_vec").cast("array<double>").as("q_vec"))
-      .dropDuplicates("q_id")
-    candidates
-      .join(pruned.select(col(idCol).as("c_id"),
-        col(vecCol).cast("array<double>").as("__cvec")), Seq("c_id"))
-      .join(broadcast(qVecs), Seq("q_id"))
-      .withColumn("sim", graft.functions.VectorFunctions.cosine(
-        col("q_vec"), col("__cvec")))
-      .select(col("q_id"), col("c_id"), col("sim"))
-  }
-}
+/** The PQ-coded maintained index under its own name: an [[IvfIndex]] with
+  * the [[IvfCodec.Pq]] codec (`m` residual codes of `k` entries each). The
+  * lifecycle, serving and crash contract are all [[IvfIndex]]'s. */
+final class IvfPqIndex(spark: SparkSession, root: String, nPartitions: Int,
+    m: Int, k: Int, idCol: String = "vec_id", vecCol: String = "embedding",
+    cellCol: String = "cell", centId: String = "cent_id",
+    centVec: String = "cent_vec")
+  extends IvfIndex(spark, root, nPartitions, IvfCodec.Pq(m, k), idCol, vecCol,
+    cellCol, centId, centVec)

@@ -100,7 +100,7 @@ object Pq {
     array((0 until m).map(s => slice(vec, s * subDim + 1, subDim)): _*)
 
   /** Codebooks as a (sub, cent, cv) frame — the training join's side AND
-    * the persisted layout [[IvfPqIndex]] round-trips. */
+    * the persisted layout the PQ-coded [[IvfIndex]] round-trips. */
   private[similarity] def codebookFrame(spark: SparkSession,
       cents: IndexedSeq[IndexedSeq[Seq[Double]]]): DataFrame = {
     val rows = for {
@@ -149,6 +149,22 @@ object Pq {
         c => l2sq(sv, c.getField("cv")))
     }: _*)
 
+  /** The ADC candidate cut shared by every PQ scorer: per query, the
+    * `rerank` best `(q_id, c_id)` candidates by the quantized distance
+    * column `adc` (ties to the lower c_id). `rerank = Int.MaxValue` (the
+    * exhaustive oracle config) keeps EVERY candidate: the per-query rank
+    * window would shuffle+sort the whole scored candidate set by q_id only
+    * for a filter that passes all rows (row_number can't even exceed
+    * Int.MaxValue) — skip it outright, the exact rerank after the cut is
+    * then the whole operator (guide §2.4). */
+  private[similarity] def adcCut(scored: DataFrame, rerank: Int): DataFrame =
+    if (rerank == Int.MaxValue) scored.select("q_id", "c_id")
+    else scored
+      .withColumn("__cr", row_number().over(
+        Window.partitionBy("q_id").orderBy(col("adc"), col("c_id"))))
+      .filter(col("__cr") <= rerank)
+      .select("q_id", "c_id")
+
   /** ADC top-k: scan encoded corpus codes against each query's distance
     * table, keep the `rerank` best candidates per query by quantized
     * distance, exact-rerank those by true cosine. Queries (with their m×k
@@ -167,26 +183,12 @@ object Pq {
     val scored = c.join(broadcast(q.select(col("q_id"), col("dtab"))))
       .withColumn("adc", graft.functions.VectorExprFunctions
         .pq_adc(col("code"), col("dtab")))
-    // rerank = Int.MaxValue (the exhaustive oracle config) keeps EVERY
-    // candidate: the per-query rank window would shuffle+sort the whole
-    // scored candidate set by q_id only for a filter that passes all rows
-    // (row_number can't even exceed Int.MaxValue) — skip it outright, the
-    // exact rerank below is then the whole operator (guide §2.4)
-    val candidates =
-      if (rerank == Int.MaxValue) scored.select("q_id", "c_id")
-      else {
-        val wAdc = Window.partitionBy("q_id").orderBy(col("adc"), col("c_id"))
-        scored
-          .withColumn("crank", row_number().over(wAdc))
-          .filter(col("crank") <= rerank)
-          .select("q_id", "c_id")
-      }
     // vector fetch AFTER the cut: candidate side is |queries|·rerank rows,
     // corpus side co-keys on c_id — an ordinary shuffle join, nothing
     // corpus-sized is broadcast or re-read with vectors attached. The
     // final k-rank is the bounded heap (Ann.rankTopK shape): reranked
     // candidates never cross a shuffle, only n_q·k ranked rows do
-    val reranked = candidates
+    val reranked = adcCut(scored, rerank)
       .join(encodedCorpus.select(col(cId).as("c_id"),
         col(cVec).cast("array<double>").as("c_vec")), Seq("c_id"))
       .join(broadcast(q.select(col("q_id"), col("q_vec"))), Seq("q_id"))

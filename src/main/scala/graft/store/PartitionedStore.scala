@@ -336,7 +336,15 @@ final class PartitionedStore(val spark: SparkSession, val root: String,
 
   /** Initialize: route every row to its partition, one data dir per
     * partition id (all ids present, so later refreshes can address any
-    * partition). Overwrites any existing state. */
+    * partition). Overwrites any existing state.
+    *
+    * Contract callers rely on: the main partitioned write is the FIRST
+    * action on `df`. [[graft.similarity.IvfIndex.build]] takes its drift
+    * baseline from an `Observation` on `df`, which reports the metrics of
+    * the first action that completes; a pre-action added here (an
+    * `isEmpty`/`count`, or the empty-dir write moved first) would hand
+    * it the wrong run's metrics. IvfIndexSpec pins the baseline against
+    * the mean assignment d2. */
   def init(df: DataFrame): Unit = {
     require(keyCols.forall(df.columns.contains),
       s"state must carry the key columns $keyCols")

@@ -568,7 +568,7 @@ object BenchScale {
           nPartitions = cells)
         val tRebuild = time(rebuilt.build(e, cents))
         val tServe = time(
-          idx.serve(e.filter(col("vec_id") < 8), cents, k = 3, nprobe = 2)
+          idx.serve(e.filter(col("vec_id") < 8), cents, kTop = 3, nprobe = 2)
             .count())
         // reclaim the sample's two corpus-sized index copies NOW — at
         // best-of-N over two SFs, deferring to JVM exit stacks 4N copies
@@ -832,7 +832,7 @@ object BenchScale {
         graft.util.Scratch.dir(s"graft_sc_rot_$tag"), nPartitions = 8)
       rot.build(e, KMeans.train(e, "vec_id", "embedding", k = 8, iters = 2))
       val q = e.filter(col("vec_id") < 16)
-      def serveOnce(): Double = time(rot.serve(q, k = 5, nprobe = 2).count())
+      def serveOnce(): Double = time(rot.serve(q, kTop = 5, nprobe = 2).count())
       serveOnce() // warm
       val before = (1 to 3).map(_ => serveOnce()).min
       @volatile var rebuildSec = -1.0

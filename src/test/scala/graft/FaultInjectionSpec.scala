@@ -323,7 +323,7 @@ class FaultInjectionSpec extends AnyFunSuite {
       s.build(base, cents)
       assert(s.trainMeanD2 > 0.0)
       val q = emb.filter(col("vec_id") < 4)
-      val got = s.serve(q, cents, k = 3, nprobe = 4)
+      val got = s.serve(q, cents, kTop = 3, nprobe = 4)
         .select("q_id", "c_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val want = Ann.bruteForceTopK(q, base, k = 3)
         .select("q_id", "c_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -430,7 +430,7 @@ class FaultInjectionSpec extends AnyFunSuite {
     for (step <- Seq("genBuilt", "ptrWritten")) {
       val s = new RotatingIvfIndex(spark, snaps(step).toString, 4)
       assert(s.currentGen() === g2, s"$step: pointer moved before the swap")
-      assert(pairs(s.serve(q, k = 3, nprobe = 4)) === exact2,
+      assert(pairs(s.serve(q, kTop = 3, nprobe = 4)) === exact2,
         s"$step: old view does not serve end to end")
       assert(gens(s.root) === Set(g1, g2, g3), s"$step fixture")
       if (step == "ptrWritten")
@@ -442,23 +442,23 @@ class FaultInjectionSpec extends AnyFunSuite {
       assert(gens(s.root) === Set(g2, g4),
         s"$step: orphan build survived the recovery rotate: ${gens(s.root)}")
       assert(listNames(s.root, ".ptr").isEmpty, s"$step: pointer tmp leaked")
-      assert(pairs(s.serve(q, k = 3, nprobe = 4)) === exact2)
+      assert(pairs(s.serve(q, kTop = 3, nprobe = 4)) === exact2)
     }
 
     // -- killed after the swap, before the reclaim --------------------------
     locally {
       val s = new RotatingIvfIndex(spark, snaps("promoted").toString, 4)
       assert(s.currentGen() === g3, "the swap IS the promote")
-      assert(pairs(s.serve(q, k = 3, nprobe = 4)) === exact3)
+      assert(pairs(s.serve(q, kTop = 3, nprobe = 4)) === exact3)
       assert(gens(s.root) === Set(g1, g2, g3),
         "fixture: expected the generations the crashed reclaim left")
       s.rebuild(emb, cents(emb))
       assert(gens(s.root) === Set(g3, s.currentGen()),
         s"recovery rotate did not reclaim the stale generations: ${gens(s.root)}")
-      assert(pairs(s.serve(q, k = 3, nprobe = 4)) === exact2)
+      assert(pairs(s.serve(q, kTop = 3, nprobe = 4)) === exact2)
     }
     // the original (uncrashed) root kept its own contract throughout
-    assert(pairs(rot.serve(q, k = 3, nprobe = 4)) === exact3)
+    assert(pairs(rot.serve(q, kTop = 3, nprobe = 4)) === exact3)
     assert((g1 !== g2) && (g2 !== g3))
   }
 }

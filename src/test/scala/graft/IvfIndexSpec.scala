@@ -5,18 +5,34 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.similarity.{Ann, IvfIndex, KMeans}
+import graft.similarity.{Ann, IvfCodec, IvfIndex, KMeans}
 
-/** The incrementally-maintained persisted IVF index (q:ann14): append ≡
-  * rebuild at every config, crash/drift/replay failures leave the index
-  * byte-identical at its previous version, and serving prunes at the
-  * partition-directory level. */
+/** The incrementally-maintained persisted IVF index (q:ann14, and q:ann16
+  * under the PQ codec): append ≡ rebuild at every config, crash/drift/
+  * replay failures leave the index byte-identical at its previous version,
+  * and serving prunes at the partition-directory level. The lifecycle is
+  * written once, so its tests run once per codec; the PQ codec runs in its
+  * exact config (nprobe = |cells|, rerank = Int.MaxValue) wherever a test
+  * compares against brute force. */
 class IvfIndexSpec extends AnyFunSuite {
   private lazy val spark = TestSession.spark
   private lazy val emb = Tables.t(spark, TestSession.sf, "embeddings").cache()
 
-  private def newIndex(nPartitions: Int = 8) = new IvfIndex(spark,
-    Files.createTempDirectory("graft_ivfidx").toString, nPartitions)
+  private def newIndex(nPartitions: Int = 8,
+      codec: IvfCodec = IvfCodec.Raw) = new IvfIndex(spark,
+    Files.createTempDirectory("graft_ivfidx").toString, nPartitions, codec)
+
+  /** Register `body` once per codec: the raw codec under `name`, the PQ
+    * codec under `name [PQ codec]`. */
+  private def lifecycleTest(name: String)(body: IvfCodec => Unit): Unit = {
+    test(name)(body(IvfCodec.Raw))
+    test(s"$name [PQ codec]")(body(IvfCodec.Pq(m = 8, k = 16)))
+  }
+
+  /** Whether any throwable in `t`'s cause chain mentions `msg`. */
+  private def mentions(t: Throwable, msg: String): Boolean =
+    Iterator.iterate[Throwable](t)(_.getCause).takeWhile(_ != null).take(8)
+      .exists(e => e.getMessage != null && e.getMessage.contains(msg))
 
   private def pairs(df: org.apache.spark.sql.DataFrame) =
     df.select("q_id", "c_id", "rank").collect()
@@ -37,23 +53,23 @@ class IvfIndexSpec extends AnyFunSuite {
     rebuilt.build(emb, cents) // whole corpus, same frozen centroids
     val q = emb.filter(col("vec_id") < 8)
     for (np <- Seq(1, 2, 8)) {
-      val a = pairs(appended.serve(q, cents, k = 3, nprobe = np))
-      val b = pairs(rebuilt.serve(q, cents, k = 3, nprobe = np))
+      val a = pairs(appended.serve(q, cents, kTop = 3, nprobe = np))
+      val b = pairs(rebuilt.serve(q, cents, kTop = 3, nprobe = np))
       assert(a === b, s"append path != rebuild path at nprobe=$np")
     }
     // exhaustive probes over the appended index == exact top-k, full corpus
     val exact = pairs(Ann.bruteForceTopK(q, emb, k = 3))
-    assert(pairs(appended.serve(q, cents, k = 3, nprobe = 8)) === exact)
+    assert(pairs(appended.serve(q, cents, kTop = 3, nprobe = 8)) === exact)
   }
 
-  test("a poisoned append leaves the index at its previous version; " +
-      "drift and replay guards fail BEFORE any write") {
+  lifecycleTest("a poisoned append leaves the index at its previous version; " +
+      "drift and replay guards fail BEFORE any write") { codec =>
     val base = emb.filter(col("vec_id") % 2 === 0)
     val cents = KMeans.train(base, "vec_id", "embedding", k = 4, iters = 2)
-    val idx = newIndex(4)
+    val idx = newIndex(4, codec)
     idx.build(base, cents)
     val before = pairs(idx.serve(emb.filter(col("vec_id") < 4), cents,
-      k = 3, nprobe = 4))
+      kTop = 3, nprobe = 4))
     val v1 = idx.store.version()
     // 1) poisoned batch: fails mid-write, store rolls back
     val poisoned = emb.filter(col("vec_id") % 2 === 1)
@@ -77,28 +93,26 @@ class IvfIndexSpec extends AnyFunSuite {
     val replay = intercept[Exception] {
       idx.append(emb.filter(col("vec_id") % 2 === 0).limit(3), cents)
     }
-    assert(Iterator.iterate[Throwable](replay)(_.getCause)
-      .takeWhile(_ != null).take(8)
-      .exists(t => t.getMessage != null && t.getMessage.contains("replays")),
+    assert(mentions(replay, "replays"),
       s"replay failure lost its message: ${replay.getMessage}")
     // after all three failures: same version, byte-identical serving
     assert(idx.store.version() === v1)
     assert(pairs(idx.serve(emb.filter(col("vec_id") < 4), cents,
-      k = 3, nprobe = 4)) === before)
+      kTop = 3, nprobe = 4)) === before)
     // and the drift ratio IS the retrain signal: measured far above 3x
     val measured = {
-      val fresh = newIndex(4)
+      val fresh = newIndex(4, codec)
       fresh.build(base, cents)
       fresh.append(shifted, cents) // no ceiling: returns the ratio
     }
     assert(measured > 3.0, s"shifted batch should drift hard: $measured")
   }
 
-  test("compact collapses appended dir lists to one dir per partition; " +
-      "serving is unchanged; a clean index is a no-op") {
+  lifecycleTest("compact collapses appended dir lists to one dir per partition; " +
+      "serving is unchanged; a clean index is a no-op") { codec =>
     val base = emb.filter(col("vec_id") % 4 <= 1)
     val cents = KMeans.train(base, "vec_id", "embedding", k = 4, iters = 2)
-    val idx = newIndex(4)
+    val idx = newIndex(4, codec)
     idx.build(base, cents)
     idx.append(emb.filter(col("vec_id") % 4 === 2), cents)
     idx.append(emb.filter(col("vec_id") % 4 === 3), cents)
@@ -106,24 +120,24 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(fragged.values.exists(_.contains(";")),
       s"appends did not fragment any partition: $fragged")
     val q = emb.filter(col("vec_id") < 4)
-    val before = pairs(idx.serve(q, cents, k = 3, nprobe = 4))
+    val before = pairs(idx.serve(q, cents, kTop = 3, nprobe = 4))
     val v = idx.store.version()
     val compacted = idx.compact()
     assert(compacted.nonEmpty)
     assert(idx.store.manifest().values.forall(!_.contains(";")),
       s"dir lists survived compact: ${idx.store.manifest()}")
     assert(idx.store.version() === v + 1)
-    assert(pairs(idx.serve(q, cents, k = 3, nprobe = 4)) === before)
+    assert(pairs(idx.serve(q, cents, kTop = 3, nprobe = 4)) === before)
     // already-compact index: no commit, no version bump
     assert(idx.compact() === Seq.empty)
     assert(idx.store.version() === v + 1)
   }
 
-  test("remove: victims localize to their cells, fragmented partitions " +
-      "compact through the rewrite, absent ids fail loudly by default") {
+  lifecycleTest("remove: victims localize to their cells, fragmented partitions " +
+      "compact through the rewrite, absent ids fail loudly by default") { codec =>
     val base = emb.filter(col("vec_id") % 4 <= 1)
     val cents = KMeans.train(base, "vec_id", "embedding", k = 4, iters = 2)
-    val idx = newIndex(4)
+    val idx = newIndex(4, codec)
     idx.build(base, cents)
     idx.append(emb.filter(col("vec_id") % 4 === 2), cents) // fragment dirs
     // victims span the built half (%8=1 ⊂ %4=1) AND the appended batch
@@ -137,7 +151,7 @@ class IvfIndexSpec extends AnyFunSuite {
     val survivors = emb.filter(col("vec_id") % 4 <= 2 &&
       col("vec_id") % 8 =!= 1 && col("vec_id") % 8 =!= 2)
     val q = emb.filter(col("vec_id") < 4)
-    assert(pairs(idx.serve(q, cents, k = 3, nprobe = 4)) ===
+    assert(pairs(idx.serve(q, cents, kTop = 3, nprobe = 4)) ===
       pairs(Ann.bruteForceTopK(q, survivors, k = 3)))
     // the victims' ids are genuinely gone from storage, not just masked
     assert(idx.store.read().join(victims.select("vec_id"), Seq("vec_id"))
@@ -149,12 +163,12 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(idx.remove(ghost, cents, requirePresent = false) === 0L)
   }
 
-  test("empty inputs: an empty erasure batch is a 0-row no-op (no version " +
+  lifecycleTest("empty inputs: an empty erasure batch is a 0-row no-op (no version " +
       "bump); an empty build corpus fails loudly; a build that crashes " +
-      "mid-commit invalidates the drift baseline rather than going stale") {
+      "mid-commit invalidates the drift baseline rather than going stale") { codec =>
     val base = emb.filter(col("vec_id") % 4 <= 1)
     val cents = KMeans.train(base, "vec_id", "embedding", k = 4, iters = 2)
-    val idx = newIndex(4)
+    val idx = newIndex(4, codec)
     idx.build(base, cents)
     val v = idx.store.version()
     // empty victims frame: a normal no-op, not "no partitions requested"
@@ -179,21 +193,30 @@ class IvfIndexSpec extends AnyFunSuite {
       expr("raise_error('poison')")).cast("long").as("vec_id"),
       col("embedding"))
     intercept[Exception] { idx.build(poisoned, cents) }
-    val e2 = intercept[IllegalArgumentException] { idx.trainMeanD2 }
-    assert(e2.getMessage.contains("not built"))
+    codec match {
+      case IvfCodec.Raw =>
+        val e2 = intercept[IllegalArgumentException] { idx.trainMeanD2 }
+        assert(e2.getMessage.contains("not built"))
+      case _: IvfCodec.Pq =>
+        // the PQ codec reads every corpus row while training its
+        // codebooks, BEFORE anything is invalidated: the poisoned rebuild
+        // dies there and the previous index stays whole
+        assert(idx.trainMeanD2 === baselineBefore)
+        assert(idx.store.version() === v)
+    }
   }
 
-  test("randomized append/remove/compact lifecycle tracks a brute-force " +
-      "model (fixed seed) — exhaustive serve exact after every op") {
+  lifecycleTest("randomized append/remove/compact lifecycle tracks a brute-force " +
+      "model (fixed seed) — exhaustive serve exact after every op") { codec =>
     val rnd = new scala.util.Random(97)
     val allIds = emb.select("vec_id").collect().map(_.getLong(0)).toVector
     val cents = KMeans.train(emb, "vec_id", "embedding", k = 8, iters = 2)
-    val idx = newIndex()
+    val idx = newIndex(codec = codec)
     var present = allIds.filter(_ % 4 == 0).toSet
     idx.build(emb.filter(col("vec_id").isInCollection(present)), cents)
     val q = emb.filter(col("vec_id") < 8)
     def check(tag: String): Unit = {
-      val got = pairs(idx.serve(q, cents, k = 3, nprobe = 8))
+      val got = pairs(idx.serve(q, cents, kTop = 3, nprobe = 8))
       val want = pairs(Ann.bruteForceTopK(q,
         emb.filter(col("vec_id").isInCollection(present)), k = 3))
       assert(got === want, s"serve diverged from the model after $tag " +
@@ -229,14 +252,14 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(present !== allIds.filter(_ % 4 == 0).toSet, "lifecycle was a no-op")
   }
 
-  test("serving reads a strict subset of the index's partition dirs at " +
-      "bounded nprobe (directory-level prune through the store manifest)") {
+  lifecycleTest("serving reads a strict subset of the index's partition dirs at " +
+      "bounded nprobe (directory-level prune through the store manifest)") { codec =>
     val cents = KMeans.train(emb, "vec_id", "embedding", k = 8, iters = 2)
-    val idx = newIndex(8)
+    val idx = newIndex(8, codec)
     idx.build(emb, cents)
     val all = idx.store.read().inputFiles.toSet
     val served = idx.serve(emb.filter(col("vec_id") === 0), cents,
-      k = 3, nprobe = 1)
+      kTop = 3, nprobe = 1)
     val touched = served.inputFiles.filter(all.contains).toSet
     assert(touched.nonEmpty, "serve plan reads no index files?")
     assert(touched.size < all.size,
@@ -252,11 +275,11 @@ class IvfIndexSpec extends AnyFunSuite {
     df.select("corpus_id", "new_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
-  test("neighborsWithin (q:dd20): exhaustive probes ≡ the one-shot " +
-      "threshold join over the final corpus; bounded nprobe is a subset") {
+  lifecycleTest("neighborsWithin (q:dd20): exhaustive probes ≡ the one-shot " +
+      "threshold join over the final corpus; bounded nprobe is a subset") { codec =>
     val base = emb.filter(col("vec_id") % 10 =!= 0 && col("vec_id") % 10 =!= 9)
     val cents = KMeans.train(base, "vec_id", "embedding", k = 8, iters = 3)
-    val idx = newIndex()
+    val idx = newIndex(codec = codec)
     idx.build(base, cents)
     idx.append(emb.filter(col("vec_id") % 10 === 9), cents)
     idx.remove(emb.filter(col("vec_id") % 10 === 5), cents)
@@ -299,5 +322,56 @@ class IvfIndexSpec extends AnyFunSuite {
       minSim = 0.30, nprobe = 4)
     assert(empty.columns.toSeq === Seq("corpus_id", "new_id", "sim"))
     assert(empty.count() === 0L)
+  }
+
+  lifecycleTest("degenerate vectors fail loudly: a null or wrong-dimension " +
+      "vector fails build, append and remove naming its id, and leaves the " +
+      "index not built or at its previous version; an empty centroid frame " +
+      "still assigns 0 rows") { codec =>
+    val base = emb.filter(col("vec_id") % 2 === 0)
+    val cents = KMeans.train(base, "vec_id", "embedding", k = 4, iters = 2)
+    val one = emb.filter(col("vec_id") === 1)
+      .withColumn("vec_id", col("vec_id") + 7000000L)
+    val degenerate = Seq(
+      "null" -> one.withColumn("embedding",
+        lit(null).cast(emb.schema("embedding").dataType)),
+      "63-dim" -> one.withColumn("embedding", slice(col("embedding"), 1, 63)))
+    def failsNaming(body: => Any): Unit = {
+      val e = intercept[Exception](body)
+      assert(mentions(e, "no nearest cell") && mentions(e, "7000001"),
+        s"degenerate vector failed without naming it: $e")
+    }
+    for ((kind, bad) <- degenerate) {
+      val fresh = newIndex(4, codec)
+      failsNaming(fresh.build(base.unionByName(bad), cents))
+      val nb = intercept[IllegalArgumentException](fresh.trainMeanD2)
+      assert(nb.getMessage.contains("not built"), s"$kind: ${nb.getMessage}")
+      val idx = newIndex(4, codec)
+      idx.build(base, cents)
+      val v = idx.store.version()
+      val rows = idx.store.read().count()
+      failsNaming(idx.append(
+        emb.filter(col("vec_id") % 4 === 1).unionByName(bad), cents))
+      failsNaming(idx.remove(
+        emb.filter(col("vec_id") % 8 === 0).unionByName(bad), cents))
+      assert(idx.store.version() === v, s"$kind: a failed op committed")
+      assert(idx.store.read().count() === rows, s"$kind: rows moved")
+    }
+    assert(Ann.assignCellsWithDist(emb, cents.limit(0)).count() === 0L)
+  }
+
+  lifecycleTest("the build's drift baseline (an Observation riding the " +
+      "store init write) equals the mean assignment d2 of the corpus") { codec =>
+    // pins PartitionedStore.init's contract that its main write is the
+    // FIRST action on the frame it is given: a pre-action there would
+    // capture the observed metric from the wrong run
+    val base = emb.filter(col("vec_id") % 3 =!= 0)
+    val cents = KMeans.train(base, "vec_id", "embedding", k = 4, iters = 2)
+    val idx = newIndex(4, codec)
+    idx.build(base, cents)
+    val want = Ann.assignCellsWithDist(base, cents).agg(avg("d2"))
+      .head().getDouble(0)
+    assert(math.abs(idx.trainMeanD2 - want) <= 1e-9 * want,
+      s"baseline ${idx.trainMeanD2} != mean d2 $want")
   }
 }

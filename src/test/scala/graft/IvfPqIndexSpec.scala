@@ -93,10 +93,10 @@ class IvfPqIndexSpec extends AnyFunSuite {
     val e = intercept[IllegalStateException] {
       idx.append(shifted, cents, maxDriftRatio = 3.0)
     }
-    // the PQ flavor's remediation is the PQ rotator (codebooks re-freeze
-    // with the quantizer), not the raw-vector one
+    // the remediation is the one rotator, which re-freezes the codebooks
+    // with the quantizer
     assert(e.getMessage.contains("drift") &&
-      e.getMessage.contains("RotatingIvfPqIndex.rebuild"))
+      e.getMessage.contains("RotatingIvfIndex.rebuild"))
     val replay = intercept[Exception] {
       idx.append(emb.filter(col("vec_id") % 2 === 0).limit(3), cents)
     }

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.similarity.{Ann, KMeans, RotatingIvfIndex, RotatingIvfPqIndex}
+import graft.similarity.{Ann, IvfCodec, KMeans, RotatingIvfIndex}
 
 /** Online rebuild with serving continuity (q:ann17): the pointer swap is
   * the promote, serves resolve old-or-new generations atomically (never a
@@ -34,7 +34,7 @@ class RotatingIvfSpec extends AnyFunSuite {
     val half = emb.filter(col("vec_id") % 2 === 0)
     rot.build(half, KMeans.train(half, "vec_id", "embedding", k = 8, iters = 2))
     val q = emb.filter(col("vec_id") < 8)
-    assert(pairs(rot.serve(q, k = 3, nprobe = 8)) ===
+    assert(pairs(rot.serve(q, kTop = 3, nprobe = 8)) ===
       pairs(Ann.bruteForceTopK(q, half, k = 3)))
     assert(gens(root).size === 1)
     val g1 = rot.currentGen()
@@ -49,7 +49,7 @@ class RotatingIvfSpec extends AnyFunSuite {
     rot.rebuild(emb, KMeans.train(emb, "vec_id", "embedding", k = 8, iters = 2))
     assert(rot.currentGen() !== g1)
     assert(gens(root) === Set(g1, rot.currentGen()), "predecessor retained")
-    assert(pairs(rot.serve(q, k = 3, nprobe = 8)) ===
+    assert(pairs(rot.serve(q, kTop = 3, nprobe = 8)) ===
       pairs(Ann.bruteForceTopK(q, emb, k = 3)))
     // append now lands in the NEW generation under ITS frozen quantizer
     val extra = emb.filter(col("vec_id") < 4)
@@ -68,8 +68,8 @@ class RotatingIvfSpec extends AnyFunSuite {
       "serves stay exact across the swap; appends land in the new " +
       "generation under its own frozen models") {
     val root = Files.createTempDirectory("graft_rotpq").toString
-    val rot = new RotatingIvfPqIndex(spark, root, nPartitions = 8,
-      m = 8, k = 16)
+    val rot = new RotatingIvfIndex(spark, root, nPartitions = 8,
+      IvfCodec.Pq(m = 8, k = 16))
     val half = emb.filter(col("vec_id") % 2 === 0)
     rot.build(half, KMeans.train(half, "vec_id", "embedding", k = 8, iters = 2))
     val q = emb.filter(col("vec_id") < 8)
@@ -109,8 +109,8 @@ class RotatingIvfSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(101)
     val allIds = emb.select("vec_id").collect().map(_.getLong(0)).toVector
     val root = Files.createTempDirectory("graft_rotpq_life").toString
-    val rot = new RotatingIvfPqIndex(spark, root, nPartitions = 8,
-      m = 8, k = 16)
+    val rot = new RotatingIvfIndex(spark, root, nPartitions = 8,
+      IvfCodec.Pq(m = 8, k = 16))
     var present = allIds.filter(_ % 4 == 0).toSet
     def dfOf(ids: Set[Long]) = emb.filter(col("vec_id").isInCollection(ids))
     def retrain(ids: Set[Long]) =
@@ -198,7 +198,7 @@ class RotatingIvfSpec extends AnyFunSuite {
       assert(stored.filter(col("vec_id") >= 1000000L).count() === extra.count(),
         "append was stranded in the superseded generation")
       val q = emb.filter(col("vec_id") < 4)
-      assert(pairs(rot.serve(q, k = 3, nprobe = 4)) ===
+      assert(pairs(rot.serve(q, kTop = 3, nprobe = 4)) ===
         pairs(Ann.bruteForceTopK(q,
           emb.select("vec_id", "embedding").unionByName(extra), k = 3)))
     } finally { rot.rotator.onStep = _ => (); rebuilder.join(180000) }
@@ -236,7 +236,7 @@ class RotatingIvfSpec extends AnyFunSuite {
     assert(rot.current()._1.store.read()
       .filter(col("vec_id") >= 2000000L).count() === extra.count())
     val q = emb.filter(col("vec_id") < 4)
-    assert(pairs(rot.serve(q, k = 3, nprobe = 4)) ===
+    assert(pairs(rot.serve(q, kTop = 3, nprobe = 4)) ===
       pairs(Ann.bruteForceTopK(q,
         half.select("vec_id", "embedding").unionByName(extra), k = 3)))
   }
@@ -257,7 +257,7 @@ class RotatingIvfSpec extends AnyFunSuite {
     val done = new java.util.concurrent.atomic.AtomicBoolean(false)
     val server = new Thread(() => {
       try while (!done.get()) {
-        val got = pairs(rot.serve(q, k = 3, nprobe = 4))
+        val got = pairs(rot.serve(q, kTop = 3, nprobe = 4))
         if (got == exactA) sawOld = true
         else if (got == exactB) sawNew = true
         else { failure = Some(s"mixed serve result: $got"); done.set(true) }
@@ -307,9 +307,9 @@ class RotatingIvfSpec extends AnyFunSuite {
     // generation, so the swap cannot show through
     rot.rebuild(corpus, KMeans.train(corpus, "vec_id", "embedding", k = 8, iters = 2))
     assert(pset(rot.neighborsWithin(batch, minSim = 0.30, nprobe = 8)) === want)
-    val rotPq = new RotatingIvfPqIndex(spark,
+    val rotPq = new RotatingIvfIndex(spark,
       Files.createTempDirectory("graft_rotivfpq_nw").toString,
-      nPartitions = 8, m = 8, k = 16)
+      nPartitions = 8, IvfCodec.Pq(m = 8, k = 16))
     rotPq.build(corpus, KMeans.train(corpus, "vec_id", "embedding", k = 4, iters = 2))
     assert(pset(rotPq.neighborsWithin(batch, minSim = 0.30, nprobe = 4,
       rerank = Int.MaxValue)) === want)
